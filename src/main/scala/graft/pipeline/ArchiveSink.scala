@@ -6,7 +6,7 @@ import java.time.Instant
 import java.util.zip.GZIPOutputStream
 import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.SparkSession
 
 /** Archive sink — operator A15 (dags/msconvert_dag.py:345-439): tar the
   * original run dir, commit atomically via `.partial` temp + rename, honor
@@ -22,12 +22,16 @@ import org.apache.spark.sql.Dataset
   */
 object ArchiveSink {
 
-  def archive(statuses: Dataset[RunStatus], cfg: GraftConfig, now: Instant): Dataset[RunStatus] = {
-    val spark = statuses.sparkSession
-    import spark.implicits._
-    if (!cfg.archiveOrig) statuses
-    else statuses.mapPartitions(_.map(s => archiveOne(s, cfg, now)))
-  }
+  /** Archives the batch at the convert stage's width (`min(poolSlots, rows)`
+    * tasks) and collects the updated statuses, so a replay never re-tars.
+    */
+  def archive(spark: SparkSession, statuses: Seq[RunStatus], cfg: GraftConfig,
+      now: Instant): Seq[RunStatus] =
+    if (!cfg.archiveOrig || statuses.isEmpty) statuses
+    else spark.sparkContext
+      .parallelize(statuses, ExternalProcess.poolWidth(cfg, statuses.size))
+      .map(archiveOne(_, cfg, now))
+      .collect().toSeq
 
   private def archiveOne(s: RunStatus, cfg: GraftConfig, now: Instant): RunStatus = {
     // guard: only archive runs whose expected converted output exists (:362-379)

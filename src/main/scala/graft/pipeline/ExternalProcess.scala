@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.SparkSession
 
 /** The external-process transform — operator A13 (dags/msconvert_dag.py:
   * 249-343), the reference's per-run `msconvert` invocation reduced to its
@@ -12,12 +12,18 @@ import org.apache.spark.sql.Dataset
   * exists. (Wine-prefix seeding and Docker mounts are site mechanics, not
   * semantics — SURVEY.md §2.A13.)
   *
-  * Parallelism is bounded to `poolSlots` partitions (the reference's Airflow
-  * pool of 4, docker-compose.yml:74) via coalesce — each partition runs its
-  * rows sequentially, so at most `poolSlots` subprocesses exist at once,
-  * cluster-wide the same contract as the pool. A10 (skip-on-missing) runs at
-  * stage entry: a run dir that vanished between discovery and processing is
-  * counted `skipped`, never `failed` (:226-228).
+  * Width rule: a cycle's batch (at most MAX_MAP runs, held on the driver)
+  * is sliced into `min(poolSlots, runs)` partitions, one task each; a task
+  * runs its rows sequentially, so at most `poolSlots` subprocesses exist at
+  * once — cluster-wide the same contract as the reference's Airflow pool of
+  * 4 (docker-compose.yml:74) — and a batch of at least `poolSlots` runs uses
+  * every slot. The width is set where the rows are sliced: `coalesce` only
+  * merges partitions and cannot widen, so coalescing an upstream that
+  * arrives as one partition (a sorted, limited batch does) converts
+  * serially. The statuses are collected, so no lineage replay re-runs a
+  * subprocess. A10 (skip-on-missing) runs at stage entry: a run dir that
+  * vanished between discovery and processing is counted `skipped`, never
+  * `failed` (:226-228).
   */
 object ExternalProcess {
 
@@ -30,13 +36,16 @@ object ExternalProcess {
     template.map(arg => subs.foldLeft(arg) { case (a, (k, v)) => a.replace(k, v) })
   }
 
-  def convert(envs: Dataset[RunEnv], cfg: GraftConfig): Dataset[RunStatus] = {
-    val spark = envs.sparkSession
-    import spark.implicits._
-    envs
-      .coalesce(math.max(1, cfg.poolSlots)) // A17 concurrency governor
-      .mapPartitions(_.map(e => runOne(e, cfg)))
-  }
+  /** The width rule: tasks for a batch of `rows` on the pool (A17 governor). */
+  private[pipeline] def poolWidth(cfg: GraftConfig, rows: Int): Int =
+    math.min(math.max(1, cfg.poolSlots), rows)
+
+  def convert(spark: SparkSession, envs: Seq[RunEnv], cfg: GraftConfig): Seq[RunStatus] =
+    if (envs.isEmpty) Seq.empty
+    else spark.sparkContext
+      .parallelize(envs, poolWidth(cfg, envs.size))
+      .map(runOne(_, cfg))
+      .collect().toSeq
 
   private def runOne(e: RunEnv, cfg: GraftConfig): RunStatus = {
     val start = new Timestamp(System.currentTimeMillis())

@@ -1,23 +1,39 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+import graft.StateTable
 
-/** One pipeline cycle — the reference's whole DagRun (SURVEY.md §3.1) as a
-  * single Spark job chain:
+/** One pipeline cycle — the reference's whole DagRun (SURVEY.md §3.1):
   *
   *   discover → dedup(anti-join ledger) → quiescence gate → naming →
   *   external-process convert (≤poolSlots) → archive (ALL_DONE) →
   *   ledger updates → run-history append → verify gate
   *
+  * Only the tree listing and the ledger anti-join grow without bound, so
+  * only they stay distributed. After the MAX_MAP cap a cycle handles at most
+  * `maxMap` runs, and the cycle treats that as a bounded batch held on the
+  * driver: discover → dedup → size observation is one Spark action whose
+  * capped result is collected (Discovery.pendingBatch); the quiescence
+  * decisions, the verify stats and the empty checks ahead of each write are
+  * computed from the collected rows without a Spark job.
+  *
+  * Exactly-once: convert and archive each collect their statuses. A
+  * collected result has no lineage left to replay, so no later action
+  * re-runs a subprocess or re-tars a run — the guarantee an eager
+  * `localCheckpoint` gave, without stranding its storage blocks on the
+  * executors every cycle.
+  *
   * Batch mode is the micro-batch body; graft.streaming.PipelinePoller wraps
-  * it on the reference's 5-minute trigger. All cross-cycle state (converted
-  * ledger, attempts, quiescence clocks, run history) lives in `stateDir`
-  * parquet tables — the Spark replacement for the reference's Airflow
-  * metadata DB + sentinel files.
+  * it on the reference's 5-minute trigger, and graft.streaming.
+  * StreamingPipeline runs the same convert → verify tail (`processBatch`).
+  * All cross-cycle state (converted ledger, attempts, quiescence clocks,
+  * run history) lives in `stateDir` parquet tables — the Spark replacement
+  * for the reference's Airflow metadata DB + sentinel files — and each cycle
+  * writes at most one parquet file to each.
   */
 object PipelineRunner {
 
@@ -27,131 +43,101 @@ object PipelineRunner {
       ready: Long,
       stats: VerifyGate.BatchStats)
 
+  /** One row of the quiescence clock table (A9 state between cycles). */
+  final case class QuietRow(path: String, lastSize: Long, stableSince: Long)
+
+  private val QuietSchema = StateTable.schemaOf[QuietRow]
+
+  /** History rows are the cycle's RunStatus rows stamped with `cycleTs`. */
+  private val HistorySchema = StructType(
+    StateTable.schemaOf[RunStatus].fields :+ StructField("cycleTs", TimestampType))
+
   def runCycle(
       spark: SparkSession,
       cfg: GraftConfig,
       now: Instant = Instant.now()): CycleResult = {
-    import spark.implicits._
     val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)
-
-    val discovered = Discovery.discover(spark, cfg).cache()
-    val nDiscovered = discovered.count()
-    val pending = Discovery.dedup(discovered, ledger, cfg).cache()
-    val nPending = pending.count()
-    if (nPending == cfg.maxMap)
+    val (discovered, pending) = Discovery.pendingBatch(spark, ledger, cfg)
+    if (pending.size == cfg.maxMap)
       log.info(s"cycle capped at MAX_MAP=${cfg.maxMap}; remainder next cycle")
-
-    // A9: observe sizes on executors, advance quiescence clocks vs state table
-    val ready = quiesce(spark, pending, cfg, now).cache()
-    val nReady = ready.count()
-
-    val envs = ready.map(r => Naming.runEnv(r, cfg, now))
-
-    // A13 + A15: side-effecting stages — localCheckpoint materializes the
-    // statuses exactly once so no retry/lineage replay re-runs subprocesses.
-    val statuses0 = ExternalProcess.convert(envs, cfg).localCheckpoint(eager = true)
-    val statuses = ArchiveSink.archive(statuses0, cfg, now).localCheckpoint(eager = true)
-
-    // A6 + A14: ledger updates
-    val statusDf = statuses.toDF()
-    ledger.appendConverted(statusDf)
-    ledger.recordFailures(statusDf)
-
-    appendHistory(spark, cfg, statusDf, now)
-
-    // A16 — throws on threshold breach, after bookkeeping (ALL_DONE ordering)
-    val st = VerifyGate.stats(statuses)
-    VerifyGate.check(st, cfg.failThreshold)
-
-    discovered.unpersist(); pending.unpersist(); ready.unpersist()
-    CycleResult(nDiscovered, nPending, nReady, st)
+    val ready = quiesce(spark, pending, cfg, now)
+    val st = processBatch(spark, cfg, ledger, ready, now)
+    CycleResult(discovered, pending.size, ready.size, st)
   }
 
-  /** Quiescence gate: current sizes join the persisted clock table through
-    * the pure Quiescence.advance transition; ready rows flow on, the updated
-    * clock table is snapshot-swapped for the next cycle.
+  /** The convert → archive → ledger → history → verify tail shared by batch
+    * cycles and streaming micro-batches.
+    *
+    * A13 + A15 each collect their statuses (exactly-once, see above); A6 +
+    * A14 ledger updates and the history append follow; A16 throws on a
+    * threshold breach only after all bookkeeping (ALL_DONE ordering).
+    */
+  private[graft] def processBatch(
+      spark: SparkSession,
+      cfg: GraftConfig,
+      ledger: LedgerStore,
+      ready: Seq[RunRecord],
+      now: Instant): VerifyGate.BatchStats = {
+    val converted = ExternalProcess.convert(spark, ready.map(Naming.runEnv(_, cfg, now)), cfg)
+    val statuses = ArchiveSink.archive(spark, converted, cfg, now)
+    ledger.appendConverted(statuses)
+    ledger.recordFailures(statuses)
+    appendHistory(spark, cfg, statuses, now)
+    val st = VerifyGate.stats(statuses)
+    VerifyGate.check(st, cfg.failThreshold)
+    st
+  }
+
+  /** Quiescence gate: the batch's observed sizes meet the persisted clock
+    * table through the pure Quiescence.advance transition; ready rows flow
+    * on, the not-ready clocks are snapshot-swapped for the next cycle. The
+    * clock table holds only not-ready rows of a capped batch, so it is
+    * bounded by `maxMap` and read to the driver.
     */
   private def quiesce(
       spark: SparkSession,
-      pending: Dataset[RunRecord],
+      pending: Seq[(RunRecord, Long)],
       cfg: GraftConfig,
-      now: Instant): Dataset[RunRecord] = {
+      now: Instant): Seq[RunRecord] = {
     import spark.implicits._
     val nowS = now.getEpochSecond
     val statePath = s"${cfg.stateDir}/quiet"
+    val clocks = StateTable.read(spark, statePath, QuietSchema).as[QuietRow].collect()
+      .map(q => q.path -> Quiescence.QuietState(q.lastSize, q.stableSince)).toMap
 
-    val observed = pending.map { r =>
-      (r.path, r.plateRel, r.base, Discovery.dirSizeBytes(Paths.get(r.path)))
-    }.toDF("path", "plateRel", "base", "size")
-
-    val prev: DataFrame =
-      if (Files.exists(Paths.get(statePath))) spark.read.parquet(statePath)
-      else Seq.empty[(String, Long, Long)].toDF("path", "lastSize", "stableSince")
-
-    val joined = observed.join(prev, Seq("path"), "left")
-      .as[(String, String, String, Long, Option[Long], Option[Long])]
-
-    val decided = joined.map { case (path, plateRel, base, size, lastSize, since) =>
-      val prevState = for (ls <- lastSize; ss <- since)
-        yield Quiescence.QuietState(ls, ss)
-      val d = Quiescence.advance(prevState, size, nowS, cfg.quietS)
-      (path, plateRel, base, d.state.lastSize, d.state.stableSinceEpochS, d.ready)
-    }.toDF("path", "plateRel", "base", "lastSize", "stableSince", "ready")
-      .localCheckpoint(eager = true) // decouple from prev before the swap below
-
-    swapState(spark, decided.where(!col("ready"))
-      .select("path", "lastSize", "stableSince"), statePath)
-
-    decided.where(col("ready"))
-      .select("path", "plateRel", "base").as[RunRecord]
-  }
-
-  private def swapState(spark: SparkSession, df: DataFrame, livePath: String): Unit = {
-    val tmp = livePath + ".swap"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val live = Paths.get(livePath)
-    val old = Paths.get(livePath + ".old")
-    if (Files.exists(live))
-      Files.move(live, old, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Files.move(Paths.get(tmp), live, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) {
-      val stream = Files.walk(old)
-      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
-      finally stream.close()
+    val decided = pending.map { case (r, size) =>
+      r -> Quiescence.advance(clocks.get(r.path), size, nowS, cfg.quietS)
     }
+    val next = decided.collect { case (r, d) if !d.ready =>
+      QuietRow(r.path, d.state.lastSize, d.state.stableSinceEpochS)
+    }
+    StateTable.swap(next.toDF().coalesce(1), statePath)
+    decided.collect { case (r, d) if d.ready => r }
   }
 
   /** Run-history table — the engine's task_instance analog; the B1-B9
     * analytics queries run over it (SURVEY.md §7.2.h).
     */
   private def appendHistory(
-      spark: SparkSession, cfg: GraftConfig, statuses: DataFrame, now: Instant): Unit = {
-    if (statuses.isEmpty) return
-    statuses
-      .withColumn("cycleTs", lit(new Timestamp(now.toEpochMilli)))
-      .write.mode(SaveMode.Append).parquet(s"${cfg.stateDir}/history")
+      spark: SparkSession, cfg: GraftConfig, statuses: Seq[RunStatus], now: Instant): Unit = {
+    import spark.implicits._
+    if (statuses.nonEmpty)
+      statuses.toDF().coalesce(1)
+        .withColumn("cycleTs", lit(new Timestamp(now.toEpochMilli)))
+        .write.mode(SaveMode.Append).parquet(s"${cfg.stateDir}/history")
   }
 
   /** History table, or a schema-correct empty frame if no cycle has written
     * yet — so dashboard queries compile (and return empties) either way.
     *
-    * Read with mergeSchema and backfill: the history dir is append-only
-    * across engine versions, so files written before a RunStatus field
-    * existed (e.g. origBytes/archiveBytes) must still read — merged schema,
-    * missing columns zero-filled — rather than depend on which file's
-    * footer wins schema inference.
+    * Read with the declared schema and backfill: the history dir is
+    * append-only across engine versions, so files written before a RunStatus
+    * field existed (e.g. origBytes/archiveBytes) read that column as null,
+    * zero-filled here. No footer scan: the dir grows by one file per cycle.
     */
-  def history(spark: SparkSession, cfg: GraftConfig): DataFrame = {
-    import spark.implicits._
-    val p = s"${cfg.stateDir}/history"
-    if (!Files.exists(Paths.get(p)))
-      return spark.emptyDataset[RunStatus].toDF()
-        .withColumn("cycleTs", lit(null).cast("timestamp"))
-    var df = spark.read.option("mergeSchema", "true").parquet(p)
-    for (c <- Seq("origBytes", "archiveBytes"))
-      if (!df.columns.contains(c)) df = df.withColumn(c, lit(0L))
-    df.na.fill(0L, Seq("origBytes", "archiveBytes"))
-  }
+  def history(spark: SparkSession, cfg: GraftConfig): DataFrame =
+    StateTable.read(spark, s"${cfg.stateDir}/history", HistorySchema)
+      .na.fill(0L, Seq("origBytes", "archiveBytes"))
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 }

@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
-
 /** Batch verify gate — operator A16 (dags/msconvert_dag.py:441-474).
   *
   * Counts per-row outcomes, clamps the failure threshold to the batch size
@@ -20,13 +17,10 @@ object VerifyGate {
 
   final class BatchFailedException(msg: String) extends RuntimeException(msg)
 
-  def stats(statuses: Dataset[RunStatus]): BatchStats = {
-    val row = statuses.agg(
-      count(lit(1)).as("total"),
-      count_if(col("state") === "failed").as("failed"),
-      count_if(col("state") === "skipped").as("skipped")).head()
-    BatchStats(row.getLong(0), row.getLong(1), row.getLong(2))
-  }
+  /** Outcome counts of a driver-held batch — no Spark job. */
+  def stats(statuses: Seq[RunStatus]): BatchStats =
+    BatchStats(statuses.size, statuses.count(_.state == "failed"),
+      statuses.count(_.state == "skipped"))
 
   /** Throws BatchFailedException per the reference's rules; no-op on empty
     * batches (total=0 means nothing to verify, not all-failed).

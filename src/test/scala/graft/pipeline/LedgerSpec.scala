@@ -7,7 +7,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Scale behavior of the attempts ledger (SURVEY.md §7.4): recordFailures is
-  * a single full-outer join of (ledger ⋈ this cycle's failures) — O(failed +
+  * a single union + group-by of (ledger ∪ this cycle's failures) — O(failed +
   * ledger) — and must be a no-op on cycles with no failures: the snapshot on
   * disk is not rewritten, so a long-running poller's steady state does zero
   * ledger IO. (At 100 TB the snapshot swap becomes a MERGE in a
@@ -35,14 +35,13 @@ class LedgerSpec extends SparkSpec {
     val stateDir = Files.createTempDirectory("graft-ledger").toString
     val ledger = new LedgerStore(spark, stateDir, maxAttempts = 3)
     ledger.recordFailures(Seq(status("a", "failed"), status("b", "failed"),
-      status("c", "success")).toDS().toDF())
+      status("c", "success")))
     val after1 = snapshotFiles(stateDir)
     assert(after1.nonEmpty, "first failure cycle writes the snapshot")
 
     // steady state: repeated cycles with no failures must not rewrite
     for (_ <- 1 to 3)
-      ledger.recordFailures(Seq(status("c", "success"), status("d", "skipped"))
-        .toDS().toDF())
+      ledger.recordFailures(Seq(status("c", "success"), status("d", "skipped")))
     assert(snapshotFiles(stateDir) == after1,
       "no-failure cycles must leave the snapshot untouched (same files, same mtimes)")
 
@@ -54,9 +53,9 @@ class LedgerSpec extends SparkSpec {
   test("recordFailures: increments accumulate; untouched rows carry over") {
     val stateDir = Files.createTempDirectory("graft-ledger2").toString
     val ledger = new LedgerStore(spark, stateDir, maxAttempts = 3)
-    ledger.recordFailures(Seq(status("a", "failed"), status("b", "failed")).toDS().toDF())
-    ledger.recordFailures(Seq(status("a", "failed")).toDS().toDF())
-    ledger.recordFailures(Seq(status("a", "failed"), status("z", "failed")).toDS().toDF())
+    ledger.recordFailures(Seq(status("a", "failed"), status("b", "failed")))
+    ledger.recordFailures(Seq(status("a", "failed")))
+    ledger.recordFailures(Seq(status("a", "failed"), status("z", "failed")))
     val counts = ledger.attempts.collect()
       .map(r => r.getString(0) -> r.getInt(2)).toMap
     assert(counts == Map("a" -> 3, "b" -> 1, "z" -> 1))

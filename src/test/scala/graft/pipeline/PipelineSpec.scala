@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.sql.Timestamp
 import java.time.Instant
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
@@ -210,5 +214,107 @@ class PipelineSpec extends SparkSpec {
     PipelineRunner.runCycle(spark, cfg, Instant.parse("2026-01-01T00:00:00Z"))
     val runA = java.nio.file.Paths.get(cfg.watchDir, "plate one", "runA.d")
     assert(!Files.exists(runA), "original must be deleted after successful archive")
+  }
+
+  test("pool width: ready runs convert up to poolSlots at once, never more") {
+    // each conversion holds a slot marker while it sleeps and logs how many
+    // markers exist after taking its own: the conversions running right then
+    val root = Files.createTempDirectory("graft-pool")
+    val slots = Files.createDirectories(root.resolve("slots"))
+    val seen = root.resolve("seen.log")
+    val slotCmd = Seq("/bin/sh", "-c",
+      s"""mkdir "$slots/$$BASE" && ls "$slots" | wc -l >> "$seen"; sleep 0.4; """ +
+        s"""rmdir "$slots/$$BASE"; cat "$$IN"/* > "$$OUTDIR/$$OUTFILE"""")
+    mkTree(root.resolve("watch"), Map("p1" -> Seq("r1", "r2", "r3", "r4"), "p2" -> Seq("r5", "r6")))
+    val cfg = GraftConfig(
+      watchDir = root.resolve("watch").toString,
+      outputDir = root.resolve("out").toString,
+      archiveDir = root.resolve("arch").toString,
+      stateDir = root.resolve("state").toString,
+      quietS = 0, poolSlots = 3, command = slotCmd)
+    val r = PipelineRunner.runCycle(spark, cfg, Instant.parse("2026-01-01T00:00:00Z"))
+    assert(r.ready == 6 && r.stats.succeeded == 6)
+    val peak = Files.readAllLines(seen).asScala.map(_.trim.toInt).max
+    assert(peak > 1, "a batch of >= poolSlots ready runs must convert in parallel")
+    assert(peak <= cfg.poolSlots, s"at most poolSlots conversions at once, saw $peak")
+  }
+
+  test("empty cycles: no plates, or plates without runs, return zeros without blocking") {
+    val layouts: Seq[Path => Unit] = Seq(
+      _ => (),
+      watch => {
+        val plate = Files.createDirectories(watch.resolve("plate one"))
+        Files.createDirectories(plate.resolve("not-a-run"))
+        Files.writeString(plate.resolve("notes.txt"), "no runs here")
+      })
+    for (layout <- layouts) {
+      val root = Files.createTempDirectory("graft-empty")
+      val watch = Files.createDirectories(root.resolve("watch"))
+      layout(watch)
+      val cfg = GraftConfig(
+        watchDir = watch.toString,
+        outputDir = root.resolve("out").toString,
+        archiveDir = root.resolve("arch").toString,
+        stateDir = root.resolve("state").toString,
+        quietS = 0, command = copyCmd)
+      // an observed plan that never executes would block the cycle forever
+      val r = Await.result(Future(
+        PipelineRunner.runCycle(spark, cfg, Instant.parse("2026-01-01T00:00:00Z"))), 2.minutes)
+      assert(r == PipelineRunner.CycleResult(0, 0, 0, VerifyGate.BatchStats(0, 0, 0)))
+    }
+  }
+
+  test("history backfill: files without origBytes/archiveBytes read those as 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-hist")
+    val cfg = GraftConfig(
+      watchDir = root.resolve("watch").toString,
+      outputDir = root.resolve("out").toString,
+      archiveDir = root.resolve("arch").toString,
+      stateDir = root.resolve("state").toString)
+    val hist = s"${cfg.stateDir}/history"
+    def status(base: String, orig: Long, arc: Long) =
+      RunStatus(base, "p", s"/in/$base.d", s"$base.mzML", "success", "",
+        new Timestamp(0L), new Timestamp(60000L), archived = true, orig, arc)
+    // an older engine's file, written before the byte columns existed
+    Seq(status("old", 0L, 0L)).toDF().drop("origBytes", "archiveBytes")
+      .withColumn("cycleTs", lit(new Timestamp(1000L)))
+      .write.parquet(hist)
+    Seq(status("new", 1000L, 400L)).toDF()
+      .withColumn("cycleTs", lit(new Timestamp(2000L)))
+      .write.mode("append").parquet(hist)
+
+    val h = PipelineRunner.history(spark, cfg)
+    val bytes = h.select("base", "origBytes", "archiveBytes").as[(String, Long, Long)]
+      .collect().map { case (b, o, a) => b -> (o, a) }.toMap
+    assert(bytes == Map("old" -> (0L, 0L), "new" -> (1000L, 400L)))
+    val comp = RunAnalytics.compressionRatio(h).head()
+    assert(comp.getAs[Long]("orig_bytes") == 1000L && comp.getAs[Long]("archive_bytes") == 400L)
+    assert(comp.getAs[Double]("saved_pct") == 60.0)
+  }
+
+  test("no growth per cycle: nothing left persisted, one parquet file per table") {
+    val cfg = freshCfg(copyCmd)
+    def parquetFiles(table: String): Long = {
+      val p = Paths.get(cfg.stateDir, table)
+      if (!Files.exists(p)) 0L
+      else { val s = Files.walk(p); try s.filter(_.toString.endsWith(".parquet")).count() finally s.close() }
+    }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // the session is shared by every suite: count only what the cycles add
+    val before = persisted
+    val t0 = Instant.parse("2026-01-01T00:00:00Z")
+    for (k <- 0 until 5) {
+      // one new run per cycle, so every cycle converts and writes both tables
+      val run = Files.createDirectories(Paths.get(cfg.watchDir, "plate_two", s"new$k.d"))
+      Files.writeString(run.resolve("raw.bin"), s"payload of new$k")
+      val (conv0, hist0) = (parquetFiles("converted"), parquetFiles("history"))
+      val r = PipelineRunner.runCycle(spark, cfg, t0.plusSeconds(300L * k))
+      assert(r.stats.succeeded == (if (k == 0) 4 else 1))
+      assert((persisted -- before).isEmpty, s"cycle $k left RDDs persisted")
+      assert(parquetFiles("converted") == conv0 + 1, s"cycle $k: one converted file")
+      assert(parquetFiles("history") == hist0 + 1, s"cycle $k: one history file")
+    }
   }
 }
